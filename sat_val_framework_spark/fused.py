@@ -20,7 +20,12 @@ to the modular runner (tested):
 
 KS/PSI still run through the vectorized applyInPandas kernel (north-star
 requirement) over the unpivoted histogram rows — Python sees n_parts x
-n_bins rows, nothing more.
+n_bins rows, nothing more. The drift baselines are read through the same
+``operators.drift.resolve_baseline`` the modular runner uses.
+
+With a checkpoint, the passes' verdict rows run once: they are
+materialized (eager ``localCheckpoint``), appended with lineage, and the
+same rows are returned.
 
 Contract citations as in the modular operators (reference
 /root/reference/sat_val_framework/implement.py:100-118,140-190).
@@ -34,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark.fixtures import DOCUMENTS_SCHEMA
-from sat_val_framework_spark.operators.drift import _EPS
+from sat_val_framework_spark.operators.drift import _EPS, resolve_baseline
 from sat_val_framework_spark.operators.stats import _norm_type
 from sat_val_framework_spark.verdicts import (
     ERR_EMPTY_SERIES,
@@ -92,34 +97,6 @@ def _drift_kernel(ref: np.ndarray, col_name: str, ks_thr: float, psi_thr: float)
         )
 
     return kernel
-
-
-def _baseline_pd(baseline) -> pd.DataFrame:
-    """Baseline histograms are metadata-sized; accept a Spark frame (one
-    collect) or a pandas frame (zero Spark jobs on the hot path)."""
-    if isinstance(baseline, pd.DataFrame):
-        return baseline
-    return baseline.toPandas()
-
-
-def _edges_pd(bpd: pd.DataFrame, col_name: str) -> tuple[float, float, int]:
-    # sparse-baseline-safe like operators.drift.baseline_edges: anchor lo0
-    # from the first PRESENT row, size from the largest bin_id (len(rows)
-    # on an empirical baseline that omits empty bins undercounts the
-    # support and would index out of bounds in _ref_vector_pd)
-    rows = bpd[bpd.col_name == col_name].sort_values("bin_id")
-    if rows.empty:
-        raise ValueError(f"no baseline_stats rows for column '{col_name}'")
-    width = float(rows.bin_hi.iloc[0] - rows.bin_lo.iloc[0])
-    lo0 = float(rows.bin_lo.iloc[0]) - int(rows.bin_id.iloc[0]) * width
-    return lo0, width, int(rows.bin_id.iloc[-1]) + 1
-
-
-def _ref_vector_pd(bpd: pd.DataFrame, col_name: str, n_bins: int) -> np.ndarray:
-    ref = np.zeros(n_bins)
-    rows = bpd[bpd.col_name == col_name]
-    ref[rows.bin_id.to_numpy()] = rows.ref_frac.to_numpy()
-    return ref
 
 
 def _hist_verdicts(
@@ -188,7 +165,9 @@ def run_suite_fused(
     run_id: str | None = None,
 ) -> DataFrame:
     """The DEFAULT_SUITE's verdicts in three scans. Returns the union of
-    verdict rows (same CHECK_OUTPUT_COLS shape as the modular runner).
+    verdict rows (same CHECK_OUTPUT_COLS shape as the modular runner):
+    a lazy plan without ``checkpoint_path`` (its one consumer is the
+    caller), the materialized rows it appended with one.
 
     ``baseline_cat``: categorical baseline (col_name, value, ref_frac) for
     the drift_categorical:kind twin — Spark or pandas frame; defaults to
@@ -211,7 +190,10 @@ def run_suite_fused(
     constraint (pushed-down isin filter); uniqueness always scans all rows
     (duplicates cross partition boundaries) but emits only pending
     verdicts; already-checkpointed (constraint, partition) pairs are never
-    re-emitted, and new verdicts are appended with lineage.
+    re-emitted, and new verdicts are appended with lineage. The pass output
+    runs ONCE — an eager localCheckpoint feeds both the append and the
+    returned frame (PLANS.md checkpoint rule: two consumers, constraints ×
+    partitions rows) — so acting on the result re-runs no pass.
     """
     import uuid
 
@@ -259,6 +241,7 @@ def run_suite_fused(
                 [(c, p) for (c, p) in sorted(done_pairs)], "constraint_id string, part_id int"
             )
             verdicts = verdicts.join(done_df, ["constraint_id", "part_id"], "left_anti")
+        verdicts = verdicts.localCheckpoint(eager=True)
         ckpt.append_verdicts(finalize_verdicts(verdicts, run_id), checkpoint_path)
     return verdicts
 
@@ -290,7 +273,7 @@ def _run_fused_passes(
         from sat_val_framework_spark.fixtures import baseline_kinds_pandas
 
         baseline_cat = baseline_kinds_pandas()
-    bcat = _baseline_pd(baseline_cat)
+    bcat = baseline_cat if isinstance(baseline_cat, pd.DataFrame) else baseline_cat.toPandas()
     # (value, ref_frac) pairs for the kind mix — metadata-sized, baked into
     # the Pass B aggregation as per-category counters
     cats = [
@@ -308,11 +291,8 @@ def _run_fused_passes(
             "baseline_cat ref_frac must be > 0 for every category "
             "(drop zero-mass rows; they carry no drift information)"
         )
-    bpd = _baseline_pd(baseline)
-    lo_ns, w_ns, nb_ns = _edges_pd(bpd, "n_spans")
-    lo_tl, w_tl, nb_tl = _edges_pd(bpd, "text_len")
-    ref_ns = _ref_vector_pd(bpd, "n_spans", nb_ns)
-    ref_tl = _ref_vector_pd(bpd, "text_len", nb_tl)
+    (lo_ns, w_ns, nb_ns), ref_ns = resolve_baseline(baseline, "n_spans")
+    (lo_tl, w_tl, nb_tl), ref_tl = resolve_baseline(baseline, "text_len")
 
     # ---- Pass A: one doc-level hash-agg --------------------------------
     # span count from the cheapest leaf (kind) -> nested pruning skips the

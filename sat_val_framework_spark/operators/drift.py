@@ -12,10 +12,16 @@ Python boundary sees only n_parts × n_bins rows, never data rows. The KS/PSI
 math runs in a grouped-map ``applyInPandas`` keyed by part_id (one tiny
 pandas frame per partition, Arrow transfer both ways). This is the only
 Python-UDF code in the engine.
+
+Baselines are read in one place, ``resolve_baseline``: one filtered
+collect of a Spark baseline, no Spark job for a pandas one. The fused
+runner uses it too, and the streaming monitors resolve (or, for the
+categorical baseline, validate) once when they start, not per micro-batch.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,32 +64,51 @@ def histogram(
     )
 
 
-def baseline_edges(baseline: DataFrame, col_name: str) -> tuple[float, float, int]:
-    """Derive (lo0, width, n_bins) from the baseline_stats rows for one
-    column. Tiny dimension table — driver-side collect is the right call.
+def resolve_baseline(baseline, col_name: str) -> tuple[tuple[float, float, int], np.ndarray]:
+    """-> ((lo0, width, n_bins), ref): the bin grid and reference bin
+    fractions of one column's baseline_stats rows — the one place a drift
+    baseline is read.
+
+    ``baseline`` is a Spark frame (one filtered driver-side collect: the
+    table is metadata-sized, and no sort is needed — rows are placed by
+    bin_id), a pandas frame (no Spark job at all), or an already resolved
+    ``(edges, ref)`` pair (returned as is), so a caller scoring many
+    batches against one baseline resolves it once (streaming_drift).
 
     SPARSE baselines are legal: a baseline built from an empirical
     histogram naturally omits empty bins, so the grid is anchored from the
-    first present row (lo0 = its bin_lo minus bin_id widths) and n_bins
+    lowest present bin (lo0 = its bin_lo minus bin_id widths) and n_bins
     comes from the LARGEST bin_id, not the row count — `len(rows)` on a
     sparse baseline undercounted the support and made drift_scores index
     out of bounds (found driving an events.value baseline)."""
-    rows = (
-        baseline.filter(F.col("col_name") == col_name)
-        .select("bin_id", "bin_lo", "bin_hi")
-        .orderBy("bin_id")
-        .collect()
-    )
-    if not rows:
+    if isinstance(baseline, tuple):
+        return baseline
+    cols = ["bin_id", "bin_lo", "bin_hi", "ref_frac"]
+    if isinstance(baseline, pd.DataFrame):
+        rows = baseline.loc[baseline["col_name"] == col_name, cols]
+    else:
+        rows = pd.DataFrame(
+            baseline.filter(F.col("col_name") == col_name).select(*cols).collect(), columns=cols
+        )
+    if rows.empty:
         raise ValueError(f"no baseline_stats rows for column '{col_name}'")
-    width = rows[0]["bin_hi"] - rows[0]["bin_lo"]
-    lo0 = rows[0]["bin_lo"] - rows[0]["bin_id"] * width
-    return (lo0, width, rows[-1]["bin_id"] + 1)
+    first = rows.iloc[int(rows["bin_id"].to_numpy().argmin())]
+    width = float(first["bin_hi"] - first["bin_lo"])
+    lo0 = float(first["bin_lo"]) - int(first["bin_id"]) * width
+    n_bins = int(rows["bin_id"].max()) + 1
+    ref = np.zeros(n_bins)
+    ref[rows["bin_id"].to_numpy(dtype=int)] = rows["ref_frac"].to_numpy(dtype=float)
+    return (lo0, width, n_bins), ref
+
+
+def baseline_edges(baseline, col_name: str) -> tuple[float, float, int]:
+    """(lo0, width, n_bins) of one column's baseline (``resolve_baseline``)."""
+    return resolve_baseline(baseline, col_name)[0]
 
 
 def drift_scores(
     series: DataFrame,
-    baseline: DataFrame,
+    baseline,
     col_name: str,
     part_col: str = "part_id",
     value_col: str = "value",
@@ -95,22 +120,13 @@ def drift_scores(
     constant (n_bins doubles), so it ships to the kernel as a closure
     instead of a join spine — an earlier spine-join formulation evaluated
     the (expensive) histogram subtree twice and anti-scaled with cores.
+    ``baseline`` is anything ``resolve_baseline`` takes; building the plan
+    costs at most the baseline's one collect (none for a pandas or resolved
+    baseline).
     """
-    import numpy as np
-
-    edges = baseline_edges(baseline, col_name)
+    edges, ref = resolve_baseline(baseline, col_name)
     n_bins = edges[2]
-    ref_rows = (
-        baseline.filter(F.col("col_name") == col_name)
-        .select("bin_id", "ref_frac")
-        .orderBy("bin_id")
-        .collect()
-    )
-    ref = np.zeros(n_bins)
-    for r in ref_rows:
-        ref[r["bin_id"]] = r["ref_frac"]
     ref_cum = ref.cumsum()
-
     width = edges[1]
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -157,7 +173,7 @@ def drift_scores(
 
 def drift_check(
     series: DataFrame,
-    baseline: DataFrame,
+    baseline,
     col_name: str,
     ks_threshold: float = 0.15,
     psi_threshold: float = 0.2,
@@ -172,34 +188,36 @@ def drift_check(
     histogram; ``stats`` limits emission to the configured siblings (a suite
     asking only for KS must not gain PSI verdicts with a made-up threshold —
     ADVICE r1). A partition with zero non-NULL observations gets a typed
-    ERROR verdict (EmptySeriesError) instead of silently vanishing."""
+    ERROR verdict (EmptySeriesError) instead of silently vanishing.
+    ``baseline`` is anything ``resolve_baseline`` takes."""
     scores = drift_scores(series, baseline, col_name, part_col, value_col)
-    empty_samples = F.array().cast("array<string>")
     thresholds = {"ks": ks_threshold, "psi": psi_threshold, "emd": emd_threshold, "kl": kl_threshold}
-
-    def verdict(stat: str) -> DataFrame:
-        threshold = thresholds[stat]
-        empty = F.col("rows_scanned") == 0
-        return scores.select(
-            F.lit(f"drift_{stat}:{col_name}").alias("constraint_id"),
-            F.col("part_id"),
-            F.when(empty, F.lit(ERROR))
-            .when(F.col(stat) > threshold, F.lit(FAIL))
-            .otherwise(F.lit(PASS))
-            .alias("status"),
-            F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
-            F.col("rows_scanned"),
-            F.when(empty | (F.col(stat) > threshold), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("violation_count"),
-            empty_samples.alias("sample_violations"),
+    # one row per (partition, statistic) from ONE projection over the
+    # scores: a union of one select per statistic would run the kernel
+    # once per sibling (the shuffle is reused, the Python stage is not)
+    per_stat = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(f"drift_{s}:{col_name}").alias("constraint_id"),
+                    F.col(s).alias("score"),
+                    F.lit(float(thresholds[s])).alias("threshold"),
+                )
+                for s in stats
+            ]
         )
-
-    parts = [verdict(s) for s in stats]
-    verdicts = parts[0]
-    for v in parts[1:]:
-        verdicts = verdicts.unionByName(v)
+    ).alias("v")
+    empty = F.col("rows_scanned") == 0
+    over = F.col("v.score") > F.col("v.threshold")
+    verdicts = scores.select("part_id", "rows_scanned", per_stat).select(
+        F.col("v.constraint_id").alias("constraint_id"),
+        F.col("part_id"),
+        F.when(empty, F.lit(ERROR)).when(over, F.lit(FAIL)).otherwise(F.lit(PASS)).alias("status"),
+        F.when(empty, F.lit(ERR_EMPTY_SERIES)).alias("error_kind"),
+        F.col("rows_scanned"),
+        F.when(empty | over, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("violation_count"),
+        F.array().cast("array<string>").alias("sample_violations"),
+    )
     return verdicts, scores
 
 
@@ -333,6 +351,17 @@ def categorical_drift_scores(
     )
 
 
+def require_baseline_cat(baseline_cat: DataFrame, col_name: str) -> None:
+    """Eagerly reject a categorical baseline with no rows for ``col_name``
+    (one driver-side probe — CONFIGURED baselines are metadata-sized, same
+    contract as resolve_baseline and the fused twin): a misnamed col_name
+    would otherwise score uniform tv=0.5 everywhere, and presence-marker-only
+    partitions would lose their verdict row entirely (pending on every
+    resume)."""
+    if baseline_cat.filter(F.col("col_name") == col_name).limit(1).count() == 0:
+        raise ValueError(f"no baseline_cat rows for column '{col_name}'")
+
+
 def categorical_drift_check(
     series: DataFrame,
     baseline_cat: DataFrame,
@@ -346,19 +375,14 @@ def categorical_drift_check(
     — the 'drift_categorical' suite kind (A6/A11 realized for unordered
     columns: event types, sources, span kinds, language codes).
 
-    Eagerly rejects a baseline with no rows for ``col_name`` (driver-side
-    probe — CONFIGURED baselines are metadata-sized, same contract as
-    baseline_edges and the fused twin): a misnamed col_name would
-    otherwise score uniform tv=0.5 everywhere, and presence-marker-only
-    partitions would lose their verdict row entirely (pending on every
-    resume). Callers that derive the baseline from a big frame and know
-    it is non-empty use ``categorical_drift_scores`` directly — the probe
-    lives HERE, not in the scores builder, so the score path never pays
-    an extra job (review finding r4)."""
-    if (
-        baseline_cat.filter(F.col("col_name") == col_name).limit(1).count() == 0
-    ):
-        raise ValueError(f"no baseline_cat rows for column '{col_name}'")
+    Validates the baseline with ``require_baseline_cat`` on every call.
+    Callers that score many frames against one baseline validate it once
+    and build the verdicts from ``categorical_drift_scores`` directly
+    (streaming_categorical_drift); so do callers that derive the baseline
+    from a big frame and know it is non-empty — the probe lives HERE, not
+    in the scores builder, so the score path never pays an extra job
+    (review finding r4)."""
+    require_baseline_cat(baseline_cat, col_name)
     scores = categorical_drift_scores(series, baseline_cat, col_name, part_col, value_col)
     return (
         categorical_verdicts_from_scores(

@@ -3,19 +3,30 @@
 This is the engine equivalent of the reference's E2 hot path
 (``CollocationEventList.load_with_joint_parameters`` → per-event load → QC →
 verdicts; /root/reference/sat_val_framework/usable.py:43-48,
-implement.py:177-190): one Spark job per check over all pending partitions,
-with QC fused into the scan. Resume skips completed (constraint, partition)
-pairs via left-anti join then pushes the pending set down as a partition
-filter, so a resumed run re-scans only unfinished partitions.
+implement.py:177-190): one Spark job chain per check over all pending
+partitions, with QC fused into the scan. Resume skips completed
+(constraint, partition) pairs via left-anti join then pushes the pending set
+down as a partition filter, so a resumed run re-scans only unfinished
+partitions.
+
+Each check's output runs exactly once: ``emit`` stamps its lineage,
+materializes the rows with an eager ``localCheckpoint`` (constraints ×
+partitions rows), sets the measured ``latency_ms`` over them, appends them
+and keeps them. The returned ``RunResult.verdicts`` is the union of those
+rows — exactly what was written — so acting on it reads no source table,
+and a plan that fails only at execution time fails inside its check, as a
+typed ERROR verdict.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sat_val_framework_spark import checkpoint as ckpt
@@ -84,8 +95,19 @@ DRIFT_KINDS = ("drift_ks", "drift_psi", "drift_emd", "drift_kl")
 @dataclass
 class RunResult:
     run_id: str
-    verdicts: DataFrame
+    verdicts: DataFrame  # the rows emitted (and appended) by this call, materialized
     skipped: list[str] = field(default_factory=list)  # "<constraint>:<part>" resumed pairs
+
+
+def _params_json(checks: list[Check]) -> Column:
+    """params_json of each verdict row: its own check's, for a frame that
+    holds the rows of several checks (drift siblings sharing one pass)."""
+    params = F.lit(checks[0].params_json)
+    for chk in checks[1:]:
+        params = F.when(
+            F.col("constraint_id") == chk.constraint_id, F.lit(chk.params_json)
+        ).otherwise(params)
+    return params
 
 
 def _cat_series_for(docs: DataFrame, column: str, part_col: str) -> DataFrame:
@@ -226,16 +248,27 @@ def run_suite(
     the remaining partitions are pushed down as a filter (partition pruning).
 
     Errors are values (implement.py:23-56): a check that cannot evaluate —
-    missing dim table, unreadable partition, bad predicate — emits one
-    ``status=ERROR`` verdict row per pending partition with a typed
-    ``error_kind``, instead of killing the run. ``raise_on_error=True``
-    restores fail-fast for debugging.
+    missing dim table, unreadable partition, bad predicate, or a plan that
+    fails only when it runs — emits one ``status=ERROR`` verdict row per
+    pending partition with a typed ``error_kind``, instead of killing the
+    run. ``raise_on_error=True`` restores fail-fast for debugging.
+
+    Every verdict row's ``latency_ms`` is its check's measured time: plan
+    construction, any violations-table write, lineage stamping and the
+    check's one execution — everything but the append of the verdict rows
+    themselves, which cannot carry their own write time.
     """
     suite.validate_or_raise(docs, part_col)
     run_id = run_id or uuid.uuid4().hex[:12]
 
     all_parts = docs.select(F.col(part_col).alias("part_id")).distinct()
-    existing = ckpt.read_checkpoint(spark, checkpoint_path) if checkpoint_path else None
+    # a checkpoint that does not exist yet holds nothing to skip: no
+    # worklist or done-pair collect on a fresh run
+    existing = (
+        ckpt.read_checkpoint(spark, checkpoint_path)
+        if checkpoint_path and os.path.exists(checkpoint_path)
+        else None
+    )
     all_part_ids: set[int] | None = None
     done_pairs: set[tuple[str, int]] = set()
     if existing is not None:
@@ -291,10 +324,20 @@ def run_suite(
         skipped.extend(f"{cid}:{p}" for cid in cids for p in done)
         return df.filter(F.col(part_col).isin(ids)), True
 
-    def emit(check_out: DataFrame, params_json: str, t0: float) -> None:
-        v = finalize_verdicts(
-            check_out, run_id, params_json, snapshot_id, latency_ms=(time.time() - t0) * 1000.0
-        )
+    def emit(check_out: DataFrame, checks: list[Check], t0: float) -> None:
+        """Run ``check_out`` once and emit it as the verdicts of ``checks``
+        (several for drift siblings sharing one pass). The lineage-stamped rows are materialized
+        with an eager localCheckpoint, per the PLANS.md checkpoint rule:
+        they have two consumers (the append and the returned frame) and are
+        only constraints × partitions in size. latency_ms, known only once
+        the check has run, is a driver-side literal over the materialized
+        rows, so the append and the caller see identical rows; an execution
+        failure raises HERE, inside the check's errors-as-values handling."""
+        rows = finalize_verdicts(
+            check_out, run_id, _params_json(checks), snapshot_id
+        ).localCheckpoint(eager=True)
+        latency_ms = (time.perf_counter() - t0) * 1000.0
+        v = rows.withColumn("latency_ms", F.lit(latency_ms).cast("double"))
         if checkpoint_path:
             ckpt.append_verdicts(v, checkpoint_path)
         collected.append(v)
@@ -308,7 +351,7 @@ def run_suite(
             ckpt.append_violations(
                 viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
             )
-        emit(_violation_verdicts(scoped, viol, c.constraint_id, part_col), c.params_json, t0)
+        emit(_violation_verdicts(scoped, viol, c.constraint_id, part_col), [c], t0)
 
     def run_check(c: Check, t0: float) -> None:
         if c.kind == "schema_assert":
@@ -319,7 +362,7 @@ def run_suite(
             out = schema_assert(
                 scoped, DOCUMENTS_SCHEMA, part_col, tuple(c.params.get("not_null", ()))
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "stats":
             scoped, todo = pending_filter(c.constraint_id, profile.with_n_spans(docs))
             if not todo:
@@ -332,7 +375,7 @@ def run_suite(
                 hi=c.params.get("hi"),
             )
             out, _metrics = column_stats(scoped, [spec], part_col)
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "unique":
             # uniqueness is global: a resumed run must still scan all rows to
             # find cross-partition duplicates — but check the pending set
@@ -374,7 +417,7 @@ def run_suite(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
             scoped, _ = pending_filter(c.constraint_id, out.withColumnRenamed("part_id", part_col))
-            emit(scoped.withColumnRenamed(part_col, "part_id"), c.params_json, t0)
+            emit(scoped.withColumnRenamed(part_col, "part_id"), [c], t0)
         elif c.kind == "fd":
             # same global-check shape as 'unique': violating determinant
             # groups span partitions, so a resumed run still scans all rows
@@ -389,7 +432,7 @@ def run_suite(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
             scoped, _ = pending_filter(c.constraint_id, out.withColumnRenamed("part_id", part_col))
-            emit(scoped.withColumnRenamed(part_col, "part_id"), c.params_json, t0)
+            emit(scoped.withColumnRenamed(part_col, "part_id"), [c], t0)
         elif c.kind == "ref":
             if catalog is None:
                 raise ValueError("ref check requires catalog=")
@@ -408,7 +451,7 @@ def run_suite(
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="media_ref"
                 )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind in DRIFT_KINDS:
             if baseline is None:
                 raise ValueError("drift checks require baseline=")
@@ -438,9 +481,8 @@ def run_suite(
                 part_col=part_col,
                 stats=tuple(k.removeprefix("drift_") for k in siblings),
             )
-            # one shared pass, but each sibling's rows carry its own params
-            for sib in siblings.values():
-                emit(out.filter(F.col("constraint_id") == sib.constraint_id), sib.params_json, t0)
+            # one shared pass, run once; each sibling's rows carry its own params
+            emit(out, list(siblings.values()), t0)
         elif c.kind == "drift_categorical":
             if baseline_cat is None:
                 raise ValueError("drift_categorical checks require baseline_cat=")
@@ -461,7 +503,7 @@ def run_suite(
                 ),
                 part_col=part_col,
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "repetition":
             from sat_val_framework_spark.functions.text import repetition_profile
 
@@ -595,7 +637,7 @@ def run_suite(
                 spans_col=c.column,
                 constraint_id=c.constraint_id,
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "quantile":
             from sat_val_framework_spark.operators.stats import quantile_check
 
@@ -613,7 +655,7 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 accuracy=int(c.params.get("accuracy", 10_000)),
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "outlier":
             from sat_val_framework_spark.operators.stats import outlier_check
 
@@ -632,7 +674,7 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 accuracy=int(c.params.get("accuracy", 10_000)),
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "distinct":
             from sat_val_framework_spark.operators.stats import distinct_bound_check
 
@@ -657,7 +699,7 @@ def run_suite(
                 approx=bool(c.params.get("approx", True)),
                 rsd=float(c.params.get("rsd", 0.01)),
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "profile":
             from sat_val_framework_spark.operators.stats import profile_check
 
@@ -673,7 +715,7 @@ def run_suite(
                 min_entropy=c.params.get("min_entropy"),
                 min_distinct_ratio=c.params.get("min_distinct_ratio"),
             )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "subset":
             scoped, todo = pending_filter(c.constraint_id, docs)
             if not todo:
@@ -686,7 +728,7 @@ def run_suite(
                 ckpt.append_violations(
                     viol, violations_path, run_id, c.constraint_id, key_col="violation_key"
                 )
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         elif c.kind == "span_seq":
             if expected_docs is None:
                 raise ValueError("span_seq check requires expected_docs=")
@@ -695,13 +737,13 @@ def run_suite(
                 skipped.append(c.constraint_id)
                 return
             out, _mm = span_seq_check(scoped, expected_docs, part_col)
-            emit(out, c.params_json, t0)
+            emit(out, [c], t0)
         else:  # pragma: no cover - suite.validate blocks unknown kinds
             raise ValueError(f"unhandled check kind {c.kind}")
 
     seen_drift: set[str] = set()
     for c in suite.checks:
-        t0 = time.time()
+        t0 = time.perf_counter()
         if c.kind in DRIFT_KINDS:
             if c.column in seen_drift:
                 continue  # sibling stat already handled by the shared pass
@@ -722,26 +764,30 @@ def run_suite(
                 if c.kind in DRIFT_KINDS
                 else [c]
             )
+            evs = []
             for chk in affected:
                 ids = pending_ids([chk.constraint_id])
                 parts = all_parts if ids is None else all_parts.filter(F.col("part_id").isin(ids))
-                ev = error_verdicts(parts, chk.constraint_id, kind, str(exc))
-                try:
-                    emit(ev, chk.params_json, t0)
-                except Exception:  # noqa: BLE001
-                    # the sink itself is broken (e.g. the original failure WAS
-                    # the checkpoint append): re-emitting through the same
-                    # path would raise out of run_suite. Degrade to in-memory
-                    # ERROR verdicts — still returned, just not checkpointed,
-                    # so the pair stays pending and retries after the fix.
-                    collected.append(
-                        finalize_verdicts(ev, run_id, chk.params_json, snapshot_id)
+                evs.append(error_verdicts(parts, chk.constraint_id, kind, str(exc)))
+            ev = functools.reduce(DataFrame.unionByName, evs)
+            try:
+                emit(ev, affected, t0)
+            except Exception:  # noqa: BLE001
+                # the sink itself is broken (e.g. the original failure WAS
+                # the checkpoint append): re-emitting through the same
+                # path would raise out of run_suite. Degrade to in-memory
+                # ERROR verdicts — still returned, just not checkpointed,
+                # so the pair stays pending and retries after the fix.
+                collected.append(
+                    finalize_verdicts(
+                        ev, run_id, _params_json(affected), snapshot_id,
+                        (time.perf_counter() - t0) * 1000.0,
                     )
+                )
 
-    if collected:
-        verdicts = collected[0]
-        for v in collected[1:]:
-            verdicts = verdicts.unionByName(v)
-    else:
-        verdicts = spark.createDataFrame([], ckpt.VERDICT_SCHEMA)
+    verdicts = (
+        functools.reduce(DataFrame.unionByName, collected)
+        if collected
+        else spark.createDataFrame([], ckpt.VERDICT_SCHEMA)
+    )
     return RunResult(run_id=run_id, verdicts=verdicts, skipped=skipped)

@@ -10,6 +10,8 @@ Schema follows FIXTURES.md §4 (qc_metrics).
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -61,7 +63,9 @@ def error_kind_of(exc: BaseException) -> str:
         from pyspark.errors import AnalysisException
     except ImportError:  # pragma: no cover
         AnalysisException = ()  # type: ignore[assignment]
-    if isinstance(exc, FileNotFoundError):
+    if isinstance(exc, FileNotFoundError) or "FILE_NOT_EXIST" in str(exc):
+        # the second form: a source file deleted after spark.read surfaces
+        # only when the plan runs, as Spark's FAILED_READ_FILE.FILE_NOT_EXIST
         return ERR_FILE_NOT_FOUND
     if isinstance(exc, AnalysisException):
         msg = str(exc)
@@ -97,12 +101,18 @@ CHECK_OUTPUT_COLS = ["constraint_id", "part_id", "status", "rows_scanned", "viol
 def finalize_verdicts(
     check_out: DataFrame,
     run_id: str,
-    params_json: str = "{}",
+    params_json: str | Column = "{}",
     snapshot_id: str = "",
     latency_ms: float | None = None,
 ) -> DataFrame:
     """Stamp lineage columns (RawMetadata contract, implement.py:81-86) onto a
-    check's raw output and conform it to VERDICT_SCHEMA."""
+    check's raw output and conform it to VERDICT_SCHEMA. ``params_json``
+    may be a Column (per-row params for checks sharing one pass).
+
+    ``ts`` is a literal taken on the driver now, never
+    ``current_timestamp()``: that is re-evaluated by every action, so a
+    stamped frame appended once and returned to the caller would show the
+    caller a different ``ts`` than the checkpoint holds."""
     error_kind = (
         F.col("error_kind") if "error_kind" in check_out.columns
         else F.lit(None).cast("string")
@@ -119,7 +129,7 @@ def finalize_verdicts(
         F.lit(latency_ms).cast("double").alias("latency_ms"),
         F.lit(params_json).alias("params_json"),
         F.lit(snapshot_id).alias("snapshot_id"),
-        F.current_timestamp().alias("ts"),
+        F.lit(datetime.datetime.now()).cast("timestamp").alias("ts"),
     )
 
 

@@ -3,6 +3,8 @@ documents table (Spark) and its pandas oracle twin computed independently."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -124,3 +126,26 @@ def verdict_map(vdf: pd.DataFrame) -> dict:
         (r.constraint_id, r.part_id): (r.status, r.violation_count)
         for r in vdf.itertuples()
     }
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns (its result, the number of jobs it launched), read from
+    ``sc.statusTracker().getJobIdsForGroup`` once the listener bus has
+    delivered every event (the tracker is fed asynchronously, so a job
+    could otherwise go uncounted)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -150,3 +150,64 @@ def test_pending_parts_left_anti(spark):
     done = spark.range(4).select(F.col("id").cast("int").alias("part_id"))
     pending = {r["part_id"] for r in ckpt.pending_parts(worklist, done).collect()}
     assert pending == set(range(4, 10))
+
+
+def _half_resume(spark, docs, path, run_id):
+    """Full SMALL_SUITE run, then drop the odd partitions' verdicts (a
+    killed run) and resume: -> the resume's RunResult."""
+    run_suite(spark, docs, SMALL_SUITE, checkpoint_path=path, run_id=run_id)
+    kept = ckpt.read_checkpoint(spark, path).filter(F.col("part_id") % 2 == 0).collect()
+    shutil.rmtree(path)
+    spark.createDataFrame(kept, ckpt.VERDICT_SCHEMA).write.parquet(path)
+    return run_suite(spark, docs, SMALL_SUITE, checkpoint_path=path, run_id=run_id)
+
+
+def _rows(df):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+def test_resumed_verdicts_read_only_the_materialized_rows(spark, docs, tmp_path):
+    """Each check runs once: the returned verdicts are the rows its single
+    execution materialized, so acting on them scans neither the documents
+    table nor the checkpoint."""
+    src = str(tmp_path / "docs")
+    docs.write.parquet(src)
+    res = _half_resume(spark, spark.read.parquet(src), str(tmp_path / "ckpt"), "m1")
+    plan = res.verdicts._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
+    assert "parquet" not in plan and "Relation" not in plan, plan
+    assert {r["part_id"] % 2 for r in res.verdicts.collect()} == {1}
+
+
+def test_returned_verdicts_equal_the_appended_rows(spark, docs, tmp_path):
+    """RunResult.verdicts holds exactly the rows the checkpoint append
+    wrote — every column, ts and latency_ms included (both are driver-side
+    literals over the materialized rows, not re-evaluated per action)."""
+    path = str(tmp_path / "ckpt")
+    res = _half_resume(spark, docs, path, "m2")
+    appended = spark.read.parquet(path).filter(F.col("part_id") % 2 == 1)
+    assert _rows(res.verdicts) == _rows(appended.select(*res.verdicts.columns))
+    assert res.verdicts.filter(F.col("latency_ms").isNull() | F.col("ts").isNull()).count() == 0
+
+
+def test_latency_ms_is_the_checks_measured_time(spark, docs, catalog, baseline, baseline_cat, tmp_path):
+    """latency_ms is each check's measured time (plan, single execution),
+    not plan-build time: on a fresh checkpointed DEFAULT_SUITE run no row
+    lacks it, and the checks' latencies cover at least 80% of the call.
+    Drift siblings share one pass and its one latency, so each distinct
+    value is one check's time."""
+    import time
+
+    path = str(tmp_path / "ckpt")
+    t0 = time.perf_counter()
+    run_suite(spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
+              baseline_cat=baseline_cat, checkpoint_path=path, run_id="lat")
+    wall_ms = (time.perf_counter() - t0) * 1000.0
+    rows = spark.read.parquet(path).select("constraint_id", "latency_ms").collect()
+    assert len({r["constraint_id"] for r in rows}) == len(DEFAULT_SUITE.checks)
+    assert all(r["latency_ms"] is not None and r["latency_ms"] > 0 for r in rows)
+    per_check = {r["latency_ms"] for r in rows}
+    assert len(per_check) == len(DEFAULT_SUITE.checks) - 2  # two drift sibling pairs
+    assert sum(per_check) >= 0.8 * wall_ms, (sorted(per_check), wall_ms)

@@ -1,5 +1,7 @@
 """B7/B8: KS/PSI drift vs the numpy oracle; only the drifted partition fails."""
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from sat_val_framework_spark import fixtures as fx
@@ -217,3 +219,35 @@ def test_categorical_drift_null_group_key(spark):
     # both groups mirror the global 50/50 mix exactly
     assert got["g1"]["tv"] == got[None]["tv"] == 0.0
     assert not got[None]["drifted"]
+
+
+def test_drift_scores_pandas_baseline_launches_no_baseline_job(spark, docs, baseline, count_jobs):
+    """resolve_baseline reads a pandas baseline with no Spark job and a
+    Spark one with at most one filtered collect (no sort); both give the
+    same scores."""
+    spark_scores, n_spark = count_jobs(
+        lambda: drift_scores(profile.n_spans_series(docs), baseline, "n_spans")
+    )
+    pd_scores, n_pd = count_jobs(
+        lambda: drift_scores(profile.n_spans_series(docs), fx.baseline_stats_pandas(), "n_spans")
+    )
+    assert n_pd == 0
+    assert n_spark <= 1
+    b, n_action = count_jobs(pd_scores.toPandas)
+    assert n_action >= 1  # the counter sees the jobs an action launches
+    a = spark_scores.toPandas().sort_values("part_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b.sort_values("part_id").reset_index(drop=True))
+
+
+def test_resolve_baseline_same_grid_from_spark_and_pandas(spark, baseline):
+    from sat_val_framework_spark.operators.drift import resolve_baseline
+
+    bpd = fx.baseline_stats_pandas()
+    for col in ("n_spans", "text_len"):
+        edges, ref = resolve_baseline(baseline, col)
+        edges_pd, ref_pd = resolve_baseline(bpd, col)
+        assert edges == edges_pd
+        assert np.array_equal(ref, ref_pd)
+        assert resolve_baseline((edges, ref), col) == (edges, ref)
+    with pytest.raises(ValueError):
+        resolve_baseline(bpd, "no_such_column")

@@ -169,3 +169,28 @@ def test_summarize_verdicts_rollup(spark):
     c4 = out["c4"]
     assert (c4["n_error"], c4["total_violations"], c4["max_violations"]) == (1, 0, 0)
     assert c4["worst_group"] is None and c4["pass_rate"] == 0.0
+
+
+def test_execution_time_failure_is_a_retryable_error_verdict(spark, docs, catalog, tmp_path):
+    """A plan that fails only when it runs — here the catalog's parquet
+    files are deleted after ``spark.read`` — yields typed, retryable ERROR
+    verdicts on a run WITHOUT checkpoint_path: each check runs inside
+    run_suite, so the failure cannot surface later from the caller's
+    action (ADVICE r6)."""
+    import shutil
+
+    from sat_val_framework_spark.verdicts import ERR_FILE_NOT_FOUND, RETRYABLE_ERROR_KINDS
+
+    src = str(tmp_path / "catalog")
+    catalog.write.parquet(src)
+    gone = spark.read.parquet(src)
+    shutil.rmtree(src)
+    suite = CheckSuite(checks=[
+        Check("ref", "spans.media_ref", {"dim_table_alias": "media_catalog", "strategy": "broadcast"}),
+    ])
+    res = run_suite(spark, docs, suite, catalog=gone)
+    rows = res.verdicts.collect()
+    assert {r["part_id"] for r in rows} == set(range(fx.N_PARTS))
+    assert all(r["status"] == ERROR for r in rows)
+    assert all(r["error_kind"] == ERR_FILE_NOT_FOUND for r in rows)
+    assert ERR_FILE_NOT_FOUND in RETRYABLE_ERROR_KINDS

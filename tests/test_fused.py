@@ -17,12 +17,20 @@ def _key(rows):
     }
 
 
+FUSED_COLUMNS = [
+    "constraint_id", "part_id", "status", "rows_scanned", "violation_count",
+    "sample_violations", "error_kind",
+]
+
+
 def test_fused_matches_modular(spark, docs, catalog, baseline, baseline_cat):
     modular = run_suite(
         spark, docs, DEFAULT_SUITE, catalog=catalog, baseline=baseline,
         baseline_cat=baseline_cat
     ).verdicts.collect()
-    fused = run_suite_fused(spark, docs, catalog, baseline).collect()
+    fused_df = run_suite_fused(spark, docs, catalog, baseline)
+    assert fused_df.columns == FUSED_COLUMNS
+    fused = fused_df.collect()
     mk, fk = _key(modular), _key(fused)
     assert set(mk) == set(fk)
     for k in mk:
@@ -38,9 +46,17 @@ def test_fused_checkpoint_resume(spark, docs, catalog, baseline, tmp_path):
 
     path = str(tmp_path / "fckpt")
     kw = dict(checkpoint_path=path, run_id="fr1")
-    run_suite_fused(spark, docs, catalog, baseline, **kw)
+    first = run_suite_fused(spark, docs, catalog, baseline, **kw)
     full = _key(ckpt.read_checkpoint(spark, path).collect())
     assert len(full) > 0
+    # the passes ran once: the returned frame is the materialized rows that
+    # were appended (acting on it re-runs no pass), columns as without a
+    # checkpoint
+    plan = first._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
+    assert "InMemoryRelation" not in plan and "Relation" not in plan, plan
+    assert first.columns == FUSED_COLUMNS
+    assert _key(first.collect()) == full
 
     again = run_suite_fused(spark, docs, catalog, baseline, **kw)
     assert again.count() == 0  # noop resume

@@ -490,3 +490,18 @@ def test_streaming_span_grammar_monitor(spark, tmp_path):
             for f in ("constraint_id", "status", "rows_scanned",
                       "violation_count", "sample_violations"):
                 assert got[f] == batch[p][f], (p, f)
+
+
+def test_streaming_drift_monitors_check_their_baseline_at_start(spark, stream_dir, tmp_path, baseline, baseline_cat):
+    """The drift monitors read their baseline once, when they start: a
+    column with no baseline rows raises ValueError before any stream runs
+    (not from inside the first micro-batch)."""
+    from sat_val_framework_spark.streaming import streaming_categorical_drift, streaming_drift
+
+    with pytest.raises(ValueError):
+        streaming_drift(spark, stream_dir, baseline.filter("col_name != 'n_spans'"),
+                        str(tmp_path / "d"), column="n_spans")
+    with pytest.raises(ValueError):
+        streaming_categorical_drift(spark, stream_dir, baseline_cat, str(tmp_path / "c"),
+                                    column="no_such_column")
+    assert not spark.streams.active
